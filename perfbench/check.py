@@ -1,9 +1,9 @@
 """Output checks. Batch outputs are compared with the DuckDB oracle SQL that
 `graft.SparkEntry.oracleSql` holds for the same computation where one
-exists, and the warm-pass output must equal the cold-pass output of the
-same run (the row count and hash recorded for this seed). The stream's
-sinks are compared with a DuckDB batch twin over the events that were
-delivered."""
+exists, on every input set a pass read, and the warm-pass output must
+equal the output of the pass that first read the same input set. The
+stream's sinks are compared with a DuckDB batch twin over the events that
+were delivered."""
 import datetime as dt
 import os
 
@@ -55,9 +55,13 @@ def diff(got, exp):
     return None
 
 
+# Checks run after the measured JVM has exited, so they may use every CPU.
+THREADS = os.cpu_count() or 1
+
+
 def connect(data_dir):
     con = duckdb.connect()
-    con.execute("SET threads TO 1")
+    con.execute(f"SET threads TO {THREADS}")
     for t in TABLES:
         p = os.path.join(data_dir, f"{t}.parquet")
         if os.path.exists(p):
@@ -80,22 +84,33 @@ def same_output(con, a, b):
         if extra or missing else None
 
 
-def batch(result, data_dir):
-    """[(op, failure or None)] for every op of a batch run."""
+def batch(result):
+    """[(op, failure or None)] for every op of a batch run. The output of
+    every pass over a new input set (the first pass and the cold passes)
+    is checked against the oracle on that input set; the last warm output
+    of each input set must equal the output of the pass that first read
+    that set."""
+    passes = result["passes"]
+    firsts = {p["input"]: p for p in passes if p["phase"] in ("first", "cold")}
+    warms = {p["input"]: p for p in passes if p["phase"] == "warm"}
+    cons = {d: connect(d) for d in firsts}
     out = []
-    con = connect(data_dir)
     for op in result["ops"]:
+        why = None
         try:
-            warm = os.path.join(result["outputs"]["warm"], op)
-            why = same_output(con, warm, os.path.join(result["outputs"]["cold"], op))
-            if why:
-                why = f"warm pass differs from cold pass: {why}"
-            elif op in result["oracle"]:
-                warm = pq.read_table(warm)
-                exp = con.execute(result["oracle"][op]).fetch_arrow_table()
-                why = diff(warm, exp)
+            for d, warm in warms.items():
+                why = same_output(cons[d], os.path.join(warm["out"], op),
+                                  os.path.join(firsts[d]["out"], op))
                 if why:
-                    why = f"oracle: {why}"
+                    why = f"warm pass differs from cold pass: {why}"
+                    break
+            if not why and op in result["oracle"]:
+                for d, p in firsts.items():
+                    exp = cons[d].execute(result["oracle"][op]).fetch_arrow_table()
+                    why = diff(pq.read_table(os.path.join(p["out"], op)), exp)
+                    if why:
+                        why = f"oracle on {os.path.basename(d)}: {why}"
+                        break
         except Exception as e:  # a missing output is a failed op
             why = f"{type(e).__name__}: {e}"
         out.append((op, why))
@@ -128,7 +143,7 @@ def stream(result):
     """[(sink, failure or None)] for the three stream sinks."""
     check = result["outputs"]["check"]
     con = duckdb.connect()
-    con.execute("SET threads TO 1")
+    con.execute(f"SET threads TO {THREADS}")
     con.execute("SET TimeZone = 'UTC'")
     con.execute(f"CREATE VIEW delivered AS SELECT * REPLACE (ts::TIMESTAMP AS ts) "
                 f"FROM read_parquet('{check}/delivered/*.parquet')")

@@ -67,7 +67,8 @@ def _money(rng, lo, hi, n):
 
 
 def generate(out, seed):
-    """Write every table for `seed` into directory `out`."""
+    """Write every table for `seed` (an int, or a list of ints naming a
+    further input set of that seed) into directory `out`."""
     os.makedirs(out, exist_ok=True)
     rng = np.random.default_rng(seed)
     n = SIZES

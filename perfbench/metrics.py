@@ -99,15 +99,15 @@ def _engine(spans, passes):
 
 def batch(result, traced):
     passes = result["passes"]
-    cold = next(p for p in passes if p["phase"] == "cold")
-    warm = [p for p in passes if p["phase"] == "warm"]
+    cold_s = [p["s"] for p in passes if p["phase"] == "cold"]
+    warm_s = [p["s"] for p in passes if p["phase"] == "warm"]
     execs = [o for p in passes for o in p["ops"]]
     failed = sum(not o["ok"] for o in execs)
-    warm_s = [p["s"] for p in warm]
+    warm_pass_s = stats.median(warm_s)
     e2e = {
-        "cold_pass_s": (cold["s"], "s"),
-        "warm_pass_s": (stats.median(warm_s), "s"),
-        "ops_per_s": (len(result["ops"]) * len(warm) / sum(warm_s), "1/s"),
+        "cold_pass_s": (stats.median(cold_s), "s"),
+        "warm_pass_s": (warm_pass_s, "s"),
+        "ops_per_s": (len(result["ops"]) / warm_pass_s, "1/s"),
         "heap_peak_mb": (result["heap_peak_mb"], "MB"),
     }
     layers = {}
@@ -137,12 +137,20 @@ def _batch_layers(result, warm_s):
         for a in APPS:
             xs = [dur(s) for s in ops if s["name"] == f"apps.{a}"]
             out[f"apps.{a}.s"] = stats.median(xs) if xs else 0.0
-    cold_root = [s["id"] for s in by_name["pass.cold"]]
+    # Per cold pass, the time of the queries entering each curation
+    # module; the median over the cold passes.
     fam = result.get("families", {})
-    for s in _descendants(spans, cold_root):
-        f = fam.get(s["name"].split(".", 1)[-1])
-        if f and s["layer"] == "curation":
-            out[f"curation.{f}_s"] = out.get(f"curation.{f}_s", 0.0) + dur(s)
+    per_fam = collections.defaultdict(list)
+    for root in by_name["pass.cold"]:
+        tot = collections.Counter()
+        for s in _descendants(spans, [root["id"]]):
+            f = fam.get(s["name"].split(".", 1)[-1])
+            if f and s["layer"] == "curation":
+                tot[f] += dur(s)
+        for f, v in tot.items():
+            per_fam[f].append(v)
+    for f, vs in per_fam.items():
+        out[f"curation.{f}_s"] = stats.median(vs)
     ladder = _descendants(spans, [s["id"] for s in by_name["pass.ladder"]])
     for lay in ("tables", "etl", "splits", "joins", "aggs"):
         mine = [s for s in ladder if s["layer"] == lay]
@@ -162,9 +170,12 @@ def _batch_layers(result, warm_s):
         c["attrs"].get("broadcasts", 0) for c in ladder
         if c["name"] == "engine.plan"
         and any(p["id"] == c["parent"] and p["layer"] == "joins" for p in ladder))
-    out["memo.builds.cold"] = len(result["memo_cold"])
-    out["memo.build_s.cold"] = sum(b["s"] for b in result["memo_cold"])
-    out["memo.builds.warm"] = len(result["memo_warm"])
+    cold = [p for p in result["passes"] if p["phase"] == "cold"]
+    out["memo.builds.cold"] = stats.median([len(p["memo"]) for p in cold])
+    out["memo.build_s.cold"] = stats.median(
+        [sum(b["s"] for b in p["memo"]) for p in cold])
+    out["memo.builds.warm"] = sum(len(p["memo"]) for p in result["passes"]
+                                  if p["phase"] in ("warmup", "warm", "traced"))
     out["memo.cached_mb"] = result["cached_mb"]
     traced_s = [p["s"] for p in result["passes"] if p["phase"] == "traced"]
     out["trace.overhead_s"] = sum(traced_s) / len(traced_s) - sum(warm_s) / len(warm_s)

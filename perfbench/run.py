@@ -33,10 +33,15 @@ import metrics  # noqa: E402
 WORKLOADS = ("dws_batch", "dwd_stream", "curation_cold")
 # dwd_stream rate ladder, events per second: base, peak.
 RATES = (500, 16000)
-# Untimed warm-up at the base rate before the ladder.
-STREAM_WARMUP_S = 1
-# Input generation is repeated and its median taken, so setup_s is steady.
-SETUP_REPEATS = 3
+# Untimed warm-up at the base rate before the ladder, long enough for the
+# micro-batch path to be compiled before the base rung is timed.
+STREAM_WARMUP_S = 3
+# Input sets generated per run; setup_s takes the median generation time,
+# so it is steady. Set 0 is every workload's input; curation_cold also
+# gives each later set one cold pass (memo builds on inputs the JVM has
+# not read yet).
+INPUT_SETS = 3
+COLD_SETS = {"curation_cold": 2}
 JAVA_HEAP = "3g"
 # Wall-clock cap on the JVM of one run.
 RUN_TIMEOUT_S = 165
@@ -115,6 +120,17 @@ def loadavg():
         return -1.0
 
 
+def cpu_ticks():
+    """(steal, total) CPU ticks of the machine so far, from /proc/stat;
+    steal is time the hypervisor gave this machine's CPUs to others."""
+    try:
+        with open("/proc/stat") as f:
+            ticks = [int(x) for x in f.readline().split()[1:]]
+        return ticks[7], sum(ticks)
+    except (OSError, ValueError, IndexError):
+        return 0, 0
+
+
 def commit():
     try:
         return subprocess.run(["git", "rev-parse", "HEAD"], cwd=ROOT,
@@ -137,9 +153,12 @@ def run_jvm(cp, args, work):
         try:
             rc = p.wait(timeout=RUN_TIMEOUT_S)
         except subprocess.TimeoutExpired:
-            os.killpg(p.pid, signal.SIGKILL)
-            p.wait()
             fail(f"workload did not finish in {RUN_TIMEOUT_S}s; see {work}/jvm.log")
+        finally:
+            # on a timeout, or when this script is stopped
+            if p.poll() is None:
+                os.killpg(p.pid, signal.SIGKILL)
+                p.wait()
     if rc != 0:
         fail(f"JVM exited with {rc}; see {work}/jvm.log")
     with open(os.path.join(work, "result.json")) as f:
@@ -153,19 +172,25 @@ def main():
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     a = ap.parse_args()
+    # a stop request unwinds through run_jvm, which stops the JVM first
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
 
     cp = build()
-    load0 = loadavg()
+    load0, ticks0 = loadavg(), cpu_ticks()
     run_dir = os.path.join(BUILD, "runs", a.workload)
     shutil.rmtree(run_dir, ignore_errors=True)
-    data, work = os.path.join(run_dir, "data"), os.path.join(run_dir, "work")
+    sets = [os.path.join(run_dir, f"data{i}") for i in range(INPUT_SETS)]
+    work = os.path.join(run_dir, "work")
     gen_s = []
-    for _ in range(SETUP_REPEATS):
+    for i, d in enumerate(sets):
         t = time.perf_counter()
-        gen.generate(data, a.seed)
+        gen.generate(d, a.seed if i == 0 else [a.seed, i])
         gen_s.append(time.perf_counter() - t)
+    data = sets[0]
     args = ["--workload", a.workload, "--data", data, "--work", work,
             "--seconds", str(a.seconds), "--trace", str(a.trace)]
+    if COLD_SETS.get(a.workload):
+        args += ["--fresh", ",".join(sets[1:1 + COLD_SETS[a.workload]])]
     if a.workload == "dwd_stream":
         args += ["--rates", ",".join(map(str, RATES)),
                  "--warmup", str(STREAM_WARMUP_S), "--seed", str(a.seed)]
@@ -176,7 +201,7 @@ def main():
         checks = check.stream(result)
         m = metrics.stream(result, a.trace == 1)
     else:
-        checks = check.batch(result, data)
+        checks = check.batch(result)
         m = metrics.batch(result, a.trace == 1)
     bad = [f"{name}: {why}" for name, why in checks if why]
     # A failed batch check fails its op; a failed stream sink fails every
@@ -196,9 +221,12 @@ def main():
         print(f"{k} = {v:.6g} {u}")
     print(f"failed_ratio = {failed / m.attempted:.6g} ({failed}/{m.attempted})")
 
+    ticks1 = cpu_ticks()
+    steal_share = (ticks1[0] - ticks0[0]) / max(1, ticks1[1] - ticks0[1])
     stamp = {"workload": a.workload, "seed": a.seed, "seconds": a.seconds,
              "trace": a.trace, "commit": commit(), "nproc": os.cpu_count(),
-             "load_avg": [load0, loadavg()], "spark_conf": result["spark_conf"],
+             "load_avg": [load0, loadavg()], "steal_share": steal_share,
+             "spark_conf": result["spark_conf"],
              "rates": RATES if a.workload == "dwd_stream" else None,
              "ladder": m.ladder,
              "checks": dict(checks), "valid": m.valid,

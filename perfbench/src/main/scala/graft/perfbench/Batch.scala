@@ -9,7 +9,8 @@ import graft.apps.Apps
 import graft.ops._
 
 /** The two closed-loop batch workloads: one caller runs the workload's ops
-  * back to back, a cold pass first in a fresh JVM, then warm passes.
+  * back to back, the first pass in a fresh JVM, then cold passes over
+  * input sets the JVM has not read yet (if any), then warm passes.
   * Every op writes its result as parquet (the job's sink), so the outputs
   * the run measured are the outputs the checks read. */
 final class Batch(spark: SparkSession, data: String, tracer: Tracer) {
@@ -18,9 +19,11 @@ final class Batch(spark: SparkSession, data: String, tracer: Tracer) {
   private val passes = mutable.ArrayBuffer.empty[Map[String, Any]]
   private var opSeq = 0
 
-  /** Run every op once; returns the pass's wall time. */
-  def pass(phase: String, ops: Seq[Op], outDir: String, traced: Boolean,
-      layer: String): Double = {
+  /** Run every op once over the input set in `input`; returns the pass's
+    * wall time. The memo builds the pass paid are recorded with it. */
+  def pass(phase: String, ops: Seq[Op], input: String, outDir: String,
+      traced: Boolean, layer: String): Double = {
+    MemoLedger.drain()
     val t0 = System.nanoTime()
     val results = tracer.spanIf(traced, s"pass.$phase", "pass", 0)(ops.map { case (name, fn) =>
       opSeq += 1
@@ -28,7 +31,7 @@ final class Batch(spark: SparkSession, data: String, tracer: Tracer) {
       val error =
         try {
           if (traced) tracer.span(s"$layer.$name", layer, opSeq) {
-            val df = fn(spark, data)
+            val df = fn(spark, input)
             tracer.span("engine.plan", "engine", opSeq) {
               val (shuffles, broadcasts) = Plans.exchanges(df)
               tracer.note("exchanges", shuffles + broadcasts)
@@ -36,7 +39,7 @@ final class Batch(spark: SparkSession, data: String, tracer: Tracer) {
             }
             df.write.mode("overwrite").parquet(s"$outDir/$name")
           }
-          else fn(spark, data).write.mode("overwrite").parquet(s"$outDir/$name")
+          else fn(spark, input).write.mode("overwrite").parquet(s"$outDir/$name")
           None
         } catch {
           case e: Throwable =>
@@ -47,8 +50,9 @@ final class Batch(spark: SparkSession, data: String, tracer: Tracer) {
         "ok" -> error.isEmpty, "error" -> error.getOrElse(""))
     })
     val seconds = (System.nanoTime() - t0) / 1e9
+    val memo = MemoLedger.drain().map { case (n, s) => Map("name" -> n, "s" -> s) }
     passes += Map("phase" -> phase, "traced" -> traced, "s" -> seconds,
-      "ops" -> results)
+      "input" -> input, "out" -> outDir, "ops" -> results, "memo" -> memo)
     seconds
   }
 

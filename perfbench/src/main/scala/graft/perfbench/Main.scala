@@ -5,13 +5,13 @@ import java.lang.management.ManagementFactory
 import org.apache.spark.sql.SparkSession
 
 import graft.SparkEntry
-import graft.ops.MemoLedger
 
 /** JVM side of the benchmark: runs one workload over inputs that run.py
   * generated, and writes raw measurements to `<work>/result.json`. run.py
   * turns them into metrics and checks the outputs.
   *
   * Usage: Main --workload W --data DIR --work DIR --seconds S --trace 0|1
+  *   [--fresh DIR1,DIR2,..] (input sets for cold passes, curation_cold)
   *   [--rates R1,R2,.. --warmup S --seed N] (the last three for dwd_stream) */
 object Main {
   def main(args: Array[String]): Unit = {
@@ -21,6 +21,7 @@ object Main {
     val work = opt("work")
     val seconds = opt("seconds").toDouble
     val traced = opt("trace") == "1"
+    val fresh = opt.get("fresh").toSeq.flatMap(_.split(",")).filter(_.nonEmpty)
     val heap = new HeapMonitor
     val cpus = Runtime.getRuntime.availableProcessors
     val conf = Seq(
@@ -41,11 +42,11 @@ object Main {
 
     val result: Map[String, Any] = workload match {
       case "dws_batch" =>
-        runBatch(spark, data, work, tracer, seconds, Batch.dwsOps,
+        runBatch(spark, data, Nil, work, tracer, seconds, Batch.dwsOps,
           "apps", ladder = true,
           Batch.dwsOracles.map { case (job, q) => job -> SparkEntry.oracleSql(q) })
       case "curation_cold" =>
-        runBatch(spark, data, work, tracer, seconds,
+        runBatch(spark, data, fresh, work, tracer, seconds,
           Batch.curationOps, "curation", ladder = false,
           Batch.curationOps.flatMap { case (q, _) =>
             SparkEntry.oracleSql.get(q).map(q -> _) }.toMap) +
@@ -72,19 +73,29 @@ object Main {
     spark.sparkContext.getRDDStorageInfo
       .map(r => r.memSize + r.diskSize).sum / (1024.0 * 1024.0)
 
-  private def builds(drained: Seq[(String, Double)]): Seq[Map[String, Any]] =
-    drained.map { case (n, s) => Map("name" -> n, "s" -> s) }
-
-  private def runBatch(spark: SparkSession, data: String, work: String,
-      tracer: Tracer, seconds: Double,
+  private def runBatch(spark: SparkSession, data: String, fresh: Seq[String],
+      work: String, tracer: Tracer, seconds: Double,
       ops: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
       layer: String, ladder: Boolean,
       oracle: Map[String, String]): Map[String, Any] = {
     val b = new Batch(spark, data, tracer)
-    val cold = s"$work/out/cold"
-    val warm = s"$work/out/warm"
-    b.pass("cold", ops, cold, tracer.enabled, layer)
-    val memoCold = builds(MemoLedger.drain())
+    // The first pass runs in the fresh JVM. With no fresh input sets it is
+    // the cold pass; otherwise it only warms the engine, and every input
+    // set the JVM has not read yet gives one cold pass: nothing of it is
+    // memoized or cached, without any in-process clearing.
+    b.pass(if (fresh.isEmpty) "cold" else "first", ops, data,
+      s"$work/out/first", tracer.enabled, layer)
+    fresh.zipWithIndex.foreach { case (dir, i) =>
+      b.pass("cold", ops, dir, s"$work/out/cold$i", tracer.enabled, layer)
+    }
+    // Warm passes take turns over the input sets the cold passes built
+    // (set 0 when there were none), so no one set's share of the work sets
+    // the warm figures. One untimed pass over each set comes first: JIT
+    // compilation is still settling in it, and after cold passes over
+    // fresh sets it is the first to take that set's memo-hit path.
+    val hot = if (fresh.isEmpty) Seq(data) else fresh
+    def out(dir: String) = s"$work/out/warm-${new java.io.File(dir).getName}"
+    hot.foreach(d => b.pass("warmup", ops, d, out(d), traced = false, layer))
     // Warm passes fill the measured time without overrunning it: at least
     // one, and no pass starts that the last one says would end past it.
     // Traced runs interleave untraced and traced warm passes in ABBA order
@@ -94,20 +105,18 @@ object Main {
     var last = 0.0
     var pairs = 0
     do {
+      val dir = hot(pairs % hot.size)
       val order = if (pairs % 2 == 0) Seq(false, true) else Seq(true, false)
       order.foreach { traced =>
-        if (traced) { if (tracer.enabled) b.pass("traced", ops, warm, traced = true, layer) }
-        else last = b.pass("warm", ops, warm, traced = false, layer)
+        if (traced) { if (tracer.enabled) b.pass("traced", ops, dir, out(dir), traced = true, layer) }
+        else last = b.pass("warm", ops, dir, out(dir), traced = false, layer)
       }
       pairs += 1
     } while ((System.nanoTime() - t0) / 1e9 + last <= seconds ||
       (tracer.enabled && pairs < 2))
-    val memoWarm = builds(MemoLedger.drain())
     val cached = cachedMb(spark)
     if (ladder && tracer.enabled) b.ladder()
-    Map("passes" -> b.allPasses, "memo_cold" -> memoCold,
-      "memo_warm" -> memoWarm, "cached_mb" -> cached,
-      "outputs" -> Map("cold" -> cold, "warm" -> warm),
+    Map("passes" -> b.allPasses, "cached_mb" -> cached,
       "ops" -> ops.map(_._1), "oracle" -> oracle)
   }
 }
